@@ -6,17 +6,17 @@ Every input is a pure function of ``(seed, size, GENERATOR_VERSION)``:
   record index, values drawn as Zipf-distributed words from a seeded
   vocabulary (so Snappy finds real back-references, about 2x).
 * ``hadoop_seq_dir`` — those records written by Hadoop itself
-  (``saveAsSequenceFile``, BLOCK + ``SnappyCodec``), then read back with
-  Hadoop's reader and checked against the generator's record count and
-  key/value byte sums before the directory is published.  The program's
-  own writer never produces read inputs.
+  (``saveAsSequenceFile``, BLOCK + ``SnappyCodec``), then on every use
+  read back with Hadoop's reader and checked against the generator's
+  record count and key/value byte sums.  The program's own writer never
+  produces read inputs.
 * ``sf_tables`` — TPC-H-shaped star schema plus the ``events``,
   ``documents`` and ``embeddings`` tables the query mix reads, with the
   DuckDB oracle's answer to every query cached beside them.
 
-Directories are cached under ``<work>/fixtures/<key>``; a directory is
-published by rename only after it verified, and re-verified (file sizes
-and SHA-256 against its manifest) on every later use.
+Directories are cached under ``<work>/fixtures/<key>``, published by
+rename once built, and re-verified (file sizes and SHA-256 against
+their manifest) on every later use.
 """
 
 from __future__ import annotations
@@ -32,7 +32,7 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-GENERATOR_VERSION = 1
+GENERATOR_VERSION = 2
 TEXT = "org.apache.hadoop.io.Text"
 SNAPPY = "org.apache.hadoop.io.compress.SnappyCodec"
 KEEP_FIXTURES = 4  # most recent fixture dirs kept per kind
@@ -53,7 +53,10 @@ def kv_records(seed: int, n: int, stream: int = 0) -> pa.Table:
     rng = np.random.default_rng([seed, stream, GENERATOR_VERSION])
     vocab_size = 20_000
     letters = np.frombuffer(b"abcdefghijklmnopqrstuvwxyz", dtype=np.uint8)
-    word_lens = rng.integers(2, 11, vocab_size)
+    # word lengths by Zipf rank are the same for every seed, so every
+    # seed gives about the same bytes (the frequent words' lengths would
+    # otherwise move the total by +-12%); the seed picks the letters
+    word_lens = np.random.default_rng(GENERATOR_VERSION).integers(2, 11, vocab_size)
     chars = letters[rng.integers(0, 26, int(word_lens.sum()))].tobytes().decode()
     ends = np.cumsum(word_lens)
     vocab = np.array(
@@ -208,9 +211,6 @@ def hadoop_seq_dir(spark, work: str, seed: int, n: int, parts: int = 4) -> tuple
         for f in sorted(os.listdir(out)):
             os.rename(os.path.join(out, f), os.path.join(tmp, f + ".seq"))
         os.rmdir(out)
-        got = hadoop_read_totals(spark, tmp)
-        if got != expected:
-            raise FixtureError(f"Hadoop wrote {got}, generator made {expected}")
         for f in os.listdir(tmp):
             reader = _hadoop_reader(spark, os.path.join(tmp, f))
             try:
@@ -223,7 +223,15 @@ def hadoop_seq_dir(spark, work: str, seed: int, n: int, parts: int = 4) -> tuple
         disk = sum(os.path.getsize(os.path.join(tmp, f)) for f in os.listdir(tmp))
         return {**expected, "file_bytes": disk, "snappy_ratio": raw / disk}
 
-    return _cached(work, "seq", f"s{seed}-n{n}-p{parts}", build)
+    path, manifest = _cached(work, "seq", f"s{seed}-n{n}-p{parts}", build)
+    # checked on every use, not only when built, so that a run does the
+    # same Spark jobs before its set-up either way
+    got = hadoop_read_totals(spark, path)
+    want = {k: manifest[k] for k in got}  # the generator's totals
+    if got != want:
+        shutil.rmtree(path, ignore_errors=True)
+        raise FixtureError(f"Hadoop reads {got} from {path}, the generator made {want}")
+    return path, manifest
 
 
 # --------------------------------------------------------------------------

@@ -10,10 +10,11 @@ the line before it (``{"detail": ...}``) carries the per-op figures.
 ``--trace 0`` reports the end-to-end metrics: ``setup_s`` (JVM launch,
 ``get_spark`` with datasource registration, and the workload's first
 op; input preparation in between is not counted), ``group_a_s`` and
-``group_b_s`` (median over passes of the summed op times of each op
-group; after one untimed warm-up pass, passes repeat until ``--seconds``
-have gone, and at least the workload's ``min_passes``).  The detail line
-adds the per-op rates, ``peak_rss_mb`` and the time of each phase.
+``group_b_s`` (the sum over each op group's kinds of the op kind's
+median time).  After an untimed warm-up pass, timed passes (every
+op kind once, in a fixed order) repeat until ``--seconds`` have gone
+and at least ``MIN_PASSES`` have run.  The detail line adds every
+sample, the per-op rates, ``peak_rss_mb`` and the time of each phase.
 
 ``--trace 1`` is the separate traced run: after the warm-up it times
 one untraced pass, then one pass with ``tracing.TracedSeqFileDataSource``
@@ -41,6 +42,7 @@ from collections import defaultdict
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 WORK = os.path.join(HERE, ".work")
+MIN_PASSES = 2  # timed passes run even when --seconds have gone
 
 
 def parse_args(argv):
@@ -68,6 +70,8 @@ class Bench:
         self.get_spark_s = 0.0
 
     def start(self) -> None:
+        """``get_spark`` (datasource registration included); the first
+        call also launches the JVM."""
         from hadoop_formats_spark.session import get_spark
 
         conf = {
@@ -146,7 +150,7 @@ def shutdown_jvm() -> None:
 
 def peak_rss_mb() -> float:
     """Sum of VmHWM over this process and all of its descendants (the
-    JVM, the Python worker daemon and its workers)."""
+    JVM, the Python worker daemons and their workers)."""
     parent: dict[int, int] = {}
     for d in os.listdir("/proc"):
         if d.isdigit():
@@ -200,23 +204,20 @@ class Counter:
         return dt
 
 
-def run_pass(wl, counter: Counter, bench: Bench, traced: bool = False, once: bool = False):
-    """Every op kind in turn, each ``op.repeat`` times (``once``: one
-    time); returns ({kind: median s}, {group: s}, {kind: (epoch start,
-    epoch end)})."""
-    times, groups, windows = {}, defaultdict(float), {}
+def run_pass(wl, counter: Counter, bench: Bench, traced: bool = False):
+    """Every op kind once, in order; returns ({kind: s}, {kind: (epoch
+    start, epoch end)})."""
+    times, windows = {}, {}
     bench.traced = traced
     try:
         for op in wl.ops:
             bench.op_id = op.kind
             w0 = time.time()
-            runs = [counter.run(op) for _ in range(1 if once else op.repeat)]
-            times[op.kind] = statistics.median(runs)
+            times[op.kind] = counter.run(op)
             windows[op.kind] = (w0, time.time())
-            groups[op.group] += times[op.kind]
     finally:
         bench.traced = False
-    return times, dict(groups), windows
+    return times, windows
 
 
 def measure(args, bench: Bench) -> dict:
@@ -243,35 +244,36 @@ def measure(args, bench: Bench) -> dict:
     setup_s = launch_s + phase("setup_op")
     wl.session_ready()
     phase("session_ready")
-    if not args.smoke:
-        run_pass(wl, counter, bench, once=True)  # every op kind once, untimed
-    warmup_s = phase("warmup")
+    warm = run_pass(wl, counter, bench)[0] if not args.smoke else {}
+    warmup_s = phase("warmup")  # every op kind once, untimed
 
     detail: dict = {"workload": args.workload, "seed": args.seed, "inputs": wl.inputs,
-                    "phases_s": phases}
+                    "phases_s": phases, "warmup_op_s": warm}
     if not bench.trace:
-        op_times, group_times, passes = defaultdict(list), defaultdict(list), []
+        op_times, passes = defaultdict(list), []
         t_end = time.perf_counter() + args.seconds
         while True:
-            times, groups, _ = run_pass(wl, counter, bench)
+            times, _ = run_pass(wl, counter, bench)
             passes.append(sum(times.values()))
             for k, v in times.items():
                 op_times[k].append(v)
-            for g, v in groups.items():
-                group_times[g].append(v)
-            if time.perf_counter() >= t_end and len(passes) >= wl.min_passes:
+            if time.perf_counter() >= t_end and len(passes) >= (1 if args.smoke else MIN_PASSES):
                 break
+        op_median = {k: statistics.median(v) for k, v in op_times.items()}
+        group_s = defaultdict(float)  # sum over the group's op kinds of their medians
+        for op in wl.ops:
+            group_s[op.group] += op_median[op.kind]
         metrics = {
             "setup_s": (setup_s, "s"),
-            "group_a_s": (statistics.median(group_times["a"]), "s"),
-            "group_b_s": (statistics.median(group_times["b"]), "s"),
+            "group_a_s": (group_s["a"], "s"),
+            "group_b_s": (group_s["b"], "s"),
         }
-        named = wl.details(op_times, group_times)
+        named = wl.details(op_median, group_s)
         named["setup_s"] = metrics["setup_s"]
         named["peak_rss_mb"] = (peak_rss_mb(), "MB")
         named["failed_ops_ratio"] = (counter.failed / counter.attempted, "ratio")
         detail.update(passes=len(passes), pass_times_s=passes,
-                      op_median_s={k: statistics.median(v) for k, v in op_times.items()},
+                      op_median_s=op_median, op_times_s=op_times,
                       workload_metrics={k: {"value": v, "unit": u} for k, (v, u) in named.items()})
     else:
         metrics, detail_trace = traced_metrics(wl, counter, bench, warmup_s)
@@ -286,8 +288,8 @@ def traced_metrics(wl, counter: Counter, bench: Bench, warmup_s: float):
     from perfbench import tracing
     from perfbench.workloads import QUERY_MIX
 
-    plain, _, _ = run_pass(wl, counter, bench, once=True)
-    traced, _, windows = run_pass(wl, counter, bench, traced=True, once=True)
+    plain, _ = run_pass(wl, counter, bench)
+    traced, windows = run_pass(wl, counter, bench, traced=True)
     rss = peak_rss_mb()
     bench.stop()  # flushes the event log
     spans = tracing.load_spans(bench.trace_dir)

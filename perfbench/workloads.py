@@ -10,8 +10,8 @@ wrong answer counts as a failed op and the run goes on.
   with four user-style DataFrame ops (``full``, ``key``, ``count``,
   ``first_rows``); group ``b`` writes a cached DataFrame of the same
   record generator with ``df.write.format("hadoop_seq")``.
-* ``query_mix`` — 6 oracle-checked headline queries over parquet;
-  group ``a`` is the SQL set, group ``b`` the pipeline set (dedup, ANN,
+* ``query_mix`` — 5 oracle-checked headline queries over parquet;
+  group ``a`` is the SQL set, group ``b`` the pipeline set (ANN,
   streaming).  No SequenceFile is read or written.
 """
 
@@ -19,7 +19,6 @@ from __future__ import annotations
 
 import os
 import shutil
-import statistics
 from dataclasses import dataclass, field
 from typing import Callable
 
@@ -28,16 +27,15 @@ from pyspark.sql import functions as F
 
 from perfbench import fixtures as fx
 
-# Six of the headline queries, three per group, so that a run (JVM
-# launch, warm-up pass, two timed passes) stays under a minute on 4 cores.
+# Five of the headline queries, so that a run (JVM launch, warm-up
+# pass, timed passes) stays under a minute on 4 cores.
 QUERY_GROUPS = {
     "a": [  # sql: aggregate, 5-way shuffle join, window top-k
         "q1_pricing_summary",
         "join_5way_region_rollup_revenue",
         "window_topk_orders_per_customer",
     ],
-    "b": [  # pipeline: MinHash dedup, brute-force ANN, stateful streaming
-        "dedup_minhash_lsh",
+    "b": [  # pipeline: brute-force ANN, stateful streaming
         "ann_brute_force_topk",
         "stream_stateful_user_stats",
     ],
@@ -46,8 +44,8 @@ QUERY_MIX = QUERY_GROUPS["a"] + QUERY_GROUPS["b"]
 
 # input sizes: (full run, --smoke run)
 SIZES = {
-    "read_records": (50_000, 10_000),
-    "write_records": (100_000, 10_000),
+    "read_records": (25_000, 10_000),
+    "write_records": (50_000, 10_000),
     "sf": (0.01, 0.002),
 }
 PARTS = 4  # Hadoop part files read, and write tasks
@@ -61,19 +59,17 @@ class Op:
     group: str  # "a" or "b"
     run: Callable[[], object]
     check: Callable[[object], str | None]  # problem description, or None
-    repeat: int = 1  # runs per pass; the op's time is the median of its runs
 
 
 @dataclass
 class Workload:
     ops: list[Op]
     setup_op: Callable[[], object]  # the op each set-up ends with
-    # ({kind: [s]}, {group: [s]}) -> {metric: (value, unit)}
-    details: Callable[[dict[str, list[float]], dict[str, list[float]]], dict]
+    # ({kind: median s}, {group: s}) -> {metric: (value, unit)}
+    details: Callable[[dict[str, float], dict[str, float]], dict]
     inputs: dict = field(default_factory=dict)
     session_ready: Callable[[], object] = lambda: None  # after the set-up
     cleanup: Callable[[], object] = lambda: None
-    min_passes: int = 1  # timed passes run even when --seconds have gone
 
 
 def _expect(got, want, what: str) -> str | None:
@@ -154,12 +150,10 @@ def seq_io(bench) -> Workload:
         Op("key", "a", key, lambda r: _expect(r, totals[:2], "key")),
         Op("count", "a", lambda: df("").count(), lambda r: _expect(r, totals[0], "count")),
         Op("first_rows", "a", first_rows, check_rows),
-        # one write is ~1.5 s, too short to time once per pass
-        Op("write", "b", write, check_write, repeat=3),
+        Op("write", "b", write, check_write),
     ]
 
-    def details(times, _):
-        med = {k: statistics.median(v) for k, v in times.items()}
+    def details(med, _):
         return {
             "read_full_recs_per_s": (n_read / med["full"], "rec/s"),
             "read_key_recs_per_s": (n_read / med["key"], "rec/s"),
@@ -183,23 +177,21 @@ def query_mix(bench) -> Workload:
     sf_dir, manifest = fx.sf_tables(bench.work, bench.seed, sf, QUERY_MIX)
 
     def query(name):
-        return lambda: fx.result_answer(QUERIES[name].builder(bench.spark, sf_dir).toPandas())
+        return lambda: QUERIES[name].builder(bench.spark, sf_dir).toPandas()
 
     def expect(name):
-        return lambda got: _expect(got, manifest["oracle"][name], name)
+        return lambda pdf: _expect(fx.result_answer(pdf), manifest["oracle"][name], name)
 
     ops = [Op(name, group, query(name), expect(name))
            for group, names in QUERY_GROUPS.items() for name in names]
 
     def details(_, groups):
         return {
-            "mix_sql_s": (statistics.median(groups["a"]), "s"),
-            "mix_pipeline_s": (statistics.median(groups["b"]), "s"),
+            "mix_sql_s": (groups["a"], "s"),
+            "mix_pipeline_s": (groups["b"], "s"),
         }
 
-    # one pass (~9 s) is too short to average out run-to-run noise
-    return Workload(ops, query(QUERY_MIX[0]), details,
-                    {"sf": sf, "rows": manifest["rows"]}, min_passes=2)
+    return Workload(ops, query(QUERY_MIX[0]), details, {"sf": sf, "rows": manifest["rows"]})
 
 
 WORKLOADS = {"seq_io": seq_io, "query_mix": query_mix}

@@ -63,11 +63,13 @@ def _scaled_seq_file(n: int = 10_000_000) -> str:
     # carried 1 M-record blocks (write_batch used to flush ALL pending
     # rows once the threshold was crossed), which starves byte-range
     # splits of sync markers; v3 has spec-sized 65536-record blocks
-    path = cache_path("seq_cache", "scaled", "text_int_10m_v3.seq")
+    # v4: rebuilt after the writer moved from literal-only to real
+    # (libsnappy) compression — smaller file, copy tags on the read path
+    path = cache_path("seq_cache", "scaled", "text_int_10m_v4.seq")
     if os.path.isfile(path):
         return path
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    for old in ("text_int_10m.seq", "text_int_10m_v2.seq"):
+    for old in ("text_int_10m.seq", "text_int_10m_v2.seq", "text_int_10m_v3.seq"):
         stale = os.path.join(os.path.dirname(path), old)
         if os.path.isfile(stale):
             os.unlink(stale)
@@ -161,6 +163,7 @@ def main() -> None:
     sf = float(os.path.basename(sf_dir.rstrip("/")).replace("sf", "") or "0.1")
 
     from hadoop_formats_spark.queries import QUERIES
+    from hadoop_formats_spark.queries.seqfile_q import REFERENCE_TEXT_INT
     from hadoop_formats_spark.session import get_spark
 
     spark = get_spark("bench")
@@ -169,9 +172,7 @@ def main() -> None:
     # warmup: JVM + Arrow + python worker spin-up, incl. the Python
     # datasource path (first hadoop_seq query pays ~3s of one-time setup)
     spark.read.parquet(f"{sf_dir}/nation.parquet").count()
-    spark.read.format("hadoop_seq").load(
-        "/root/reference/tests/text-int.seq"
-    ).count()
+    spark.read.format("hadoop_seq").load(REFERENCE_TEXT_INT).count()
 
     # spin up the full Arrow python-worker pool before timing anything:
     # 32 workers each importing numpy+pandas on first use is a ~20s

@@ -17,7 +17,16 @@ from pyspark.sql import functions as F
 
 from .registry import _has_file, publish_dir, register, table
 
-REFERENCE_TEXT_INT = "/root/reference/tests/text-int.seq"
+# Hadoop-written fixtures (tools/make_jvm_fixtures.py), including the
+# two golden files mirroring the reference's text-int.seq / long-double.seq
+JVM_FIXTURE_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.dirname(os.path.abspath(__file__)))),
+    "tests",
+    "data",
+    "jvm",
+)
+REFERENCE_TEXT_INT = os.path.join(JVM_FIXTURE_DIR, "text-int.seq")
+REFERENCE_LONG_DOUBLE = os.path.join(JVM_FIXTURE_DIR, "long-double.seq")
 from hadoop_formats_spark.cachedir import cache_path
 
 _CACHE_ROOT = cache_path("seq_cache")

@@ -164,6 +164,14 @@ def _codec_funcs(codec_class: str):
 
 
 SUPPORTED_CODECS = (SNAPPY_CODEC, DEFAULT_CODEC, GZIP_CODEC, BZIP2_CODEC)
+# writer ``codec`` option short names
+CODEC_SHORT_NAMES = {
+    "snappy": SNAPPY_CODEC,
+    "default": DEFAULT_CODEC,
+    "deflate": DEFAULT_CODEC,
+    "gzip": GZIP_CODEC,
+    "bzip2": BZIP2_CODEC,
+}
 
 
 @dataclass
@@ -212,7 +220,10 @@ def _read_text(buf: bytes, pos: int) -> tuple[str, int]:
     n, pos = decode_vint(buf, pos)
     if n < 0 or pos + n > len(buf):
         raise SeqFileError("truncated text field in header")
-    return buf[pos : pos + n].decode("utf-8"), pos + n
+    try:
+        return buf[pos : pos + n].decode("utf-8"), pos + n
+    except UnicodeDecodeError as ex:
+        raise SeqFileError(f"header text is not UTF-8: {ex}") from ex
 
 
 def parse_header(buf: bytes) -> Header:
@@ -295,11 +306,9 @@ def _decompress_block_stream(buf: bytes) -> bytes:
 # Uncompressed bytes per snappy chunk — Hadoop's exact MAX_INPUT_SIZE
 # for the default 256 KiB codec buffer: bufferSize - (bufferSize/6 + 32).
 # The JVM BlockDecompressorStream reads each compressed chunk into a
-# bufferSize-byte buffer, so a chunk whose COMPRESSED size exceeds
-# 256 KiB (our old 256 KiB uncompressed chunks were 262159 bytes after
-# literal-only framing) fails there with FAILED_TO_UNCOMPRESS(5); this
-# bound guarantees compressed size <= bufferSize for any snappy encoder
-# (max expansion is len/6 + 32 — that's why Hadoop picked it).
+# bufferSize-byte buffer and fails with FAILED_TO_UNCOMPRESS(5) on a
+# larger one; snappy's worst-case expansion is len/6 + 32, so this bound
+# keeps every compressed chunk within the buffer.
 _COMPRESS_CHUNK = 256 * 1024 - ((256 * 1024) // 6 + 32)  # = 218422
 
 
@@ -332,11 +341,13 @@ def _decode_column(
         return pa.nulls(count)  # NullWritable: zero bytes/record (Writable.hs:73-75)
     if np_dtype is not None:
         # fixed-width fast path: lengths present but ignored (decode.c:137-139)
-        arr = np.frombuffer(data_buf, dtype=np_dtype)
-        if len(arr) != count:
+        width = np.dtype(np_dtype).itemsize
+        if len(data_buf) != count * width:
             raise SeqFileError(
-                f"fixed-width section has {len(arr)} records, expected {count}"
+                f"fixed-width section has {len(data_buf)} bytes, "
+                f"expected {count} records of {width}"
             )
+        arr = np.frombuffer(data_buf, dtype=np_dtype)
         return pa.array(arr.astype(np_dtype[1:]), type=arrow_type)
     # variable width: per-record lengths drive offset slicing
     if isinstance(lengths_buf, np.ndarray):

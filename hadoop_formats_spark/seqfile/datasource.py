@@ -465,15 +465,7 @@ class SeqFileWriter(DataSourceArrowWriter):
         self.block_records = int(options.get("block_records", 65536))
         self.compression_type = options.get("compression_type", "block").lower()
         codec = options.get("codec", core.SNAPPY_CODEC)
-        # accept short names: snappy, default, gzip, bzip2
-        short = {
-            "snappy": core.SNAPPY_CODEC,
-            "default": core.DEFAULT_CODEC,
-            "deflate": core.DEFAULT_CODEC,
-            "gzip": core.GZIP_CODEC,
-            "bzip2": core.BZIP2_CODEC,
-        }
-        self.codec = short.get(codec.lower(), codec)
+        self.codec = core.CODEC_SHORT_NAMES.get(codec.lower(), codec)
         self.metadata = sorted(
             (k[len("metadata."):], v)
             for k, v in options.items()

@@ -236,14 +236,7 @@ class MapFileWriter(DataSourceArrowWriter):
         self.block_records = int(options.get("block_records", 4096))
         self.compression_type = options.get("compression_type", "block").lower()
         codec = options.get("codec", core.SNAPPY_CODEC)
-        short = {
-            "snappy": core.SNAPPY_CODEC,
-            "default": core.DEFAULT_CODEC,
-            "deflate": core.DEFAULT_CODEC,
-            "gzip": core.GZIP_CODEC,
-            "bzip2": core.BZIP2_CODEC,
-        }
-        self.codec = short.get(codec.lower(), codec)
+        self.codec = core.CODEC_SHORT_NAMES.get(codec.lower(), codec)
         self.assume_sorted = options.get("assume_sorted", "").lower() == "true"
         self.bloom = options.get("bloom", "").lower() == "true"
         self.bloom_error_rate = float(options.get("bloom_error_rate", 0.005))

@@ -1,35 +1,16 @@
-"""Pure-Python raw Snappy codec (no native bindings in this environment).
+"""Raw Snappy codec: a thin wrapper over pyarrow's bundled libsnappy.
 
-Implements the raw Snappy block format (format description:
-https://github.com/google/snappy/blob/main/format_description.txt) —
-the format Hadoop's SnappyCodec feeds through its
-``BlockCompressorStream`` framing (reference: ``cbits/decode.c:76-118``
-decompresses the same chunks via libsnappy).
-
-Decompression handles the full tag set (literals + all three copy
-element kinds).  Compression emits a valid *literal-only* stream — every
-Snappy decoder accepts it; it trades compression ratio for zero
-dependency.  When a real binding (``snappy`` / ``cramjam``) is
-importable we delegate to it for both speed and ratio.
+Raw Snappy blocks (format description:
+https://github.com/google/snappy/blob/main/format_description.txt) are
+what Hadoop's SnappyCodec frames inside its ``BlockCompressorStream``;
+the reference decompresses the same chunks via libsnappy
+(``cbits/decode.c:76-118``).  Every Arrow codec failure surfaces as
+``SnappyError``.
 """
 
 from __future__ import annotations
 
-_native_compress = None
-_native_decompress = None
-try:  # pragma: no cover - not present in this container
-    import snappy as _pysnappy
-
-    _native_compress = _pysnappy.compress
-    _native_decompress = _pysnappy.uncompress
-except ImportError:
-    try:  # pragma: no cover
-        import cramjam
-
-        _native_compress = lambda b: bytes(cramjam.snappy.compress_raw(b))  # noqa: E731
-        _native_decompress = lambda b: bytes(cramjam.snappy.decompress_raw(b))  # noqa: E731
-    except ImportError:
-        pass
+import pyarrow as pa
 
 
 class SnappyError(ValueError):
@@ -53,107 +34,18 @@ def _read_uvarint(buf: bytes, pos: int) -> tuple[int, int]:
             raise SnappyError("snappy preamble varint too long")
 
 
-def _write_uvarint(n: int) -> bytes:
-    out = bytearray()
-    while True:
-        b = n & 0x7F
-        n >>= 7
-        if n:
-            out.append(b | 0x80)
-        else:
-            out.append(b)
-            return bytes(out)
-
-
 def decompress(buf: bytes) -> bytes:
-    """Decompress one raw Snappy block."""
-    if _native_decompress is not None:
-        return _native_decompress(buf)
-    expected, pos = _read_uvarint(buf, 0)
-    out = bytearray(expected)
-    opos = 0
-    blen = len(buf)
-    while pos < blen:
-        tag = buf[pos]
-        pos += 1
-        elem_type = tag & 0x03
-        if elem_type == 0:  # literal
-            ln = tag >> 2
-            if ln >= 60:
-                nbytes = ln - 59
-                if pos + nbytes > blen:
-                    raise SnappyError("truncated literal length")
-                ln = int.from_bytes(buf[pos : pos + nbytes], "little")
-                pos += nbytes
-            ln += 1
-            if pos + ln > blen or opos + ln > expected:
-                raise SnappyError("literal overruns buffer")
-            out[opos : opos + ln] = buf[pos : pos + ln]
-            pos += ln
-            opos += ln
-            continue
-        if elem_type == 1:  # copy, 1-byte offset
-            ln = ((tag >> 2) & 0x07) + 4
-            if pos >= blen:
-                raise SnappyError("truncated copy-1")
-            offset = ((tag >> 5) << 8) | buf[pos]
-            pos += 1
-        elif elem_type == 2:  # copy, 2-byte offset
-            ln = (tag >> 2) + 1
-            if pos + 2 > blen:
-                raise SnappyError("truncated copy-2")
-            offset = buf[pos] | (buf[pos + 1] << 8)
-            pos += 2
-        else:  # copy, 4-byte offset
-            ln = (tag >> 2) + 1
-            if pos + 4 > blen:
-                raise SnappyError("truncated copy-4")
-            offset = int.from_bytes(buf[pos : pos + 4], "little")
-            pos += 4
-        if offset == 0 or offset > opos or opos + ln > expected:
-            raise SnappyError("bad copy offset/length")
-        src = opos - offset
-        if offset >= ln:
-            out[opos : opos + ln] = out[src : src + ln]
-            opos += ln
-        else:
-            # overlapping copy: byte-at-a-time semantics (RLE-style)
-            for _ in range(ln):
-                out[opos] = out[src]
-                opos += 1
-                src += 1
-    if opos != expected:
-        raise SnappyError(f"snappy output short: {opos} != {expected}")
-    return bytes(out)
+    """Decompress one raw Snappy block.
 
-
-_MAX_LITERAL = 1 << 16  # chunked literals keep decoder working sets small
+    The output size comes from the block's own preamble: given a larger
+    size, Arrow would return a buffer padded to it instead of failing."""
+    size, _ = _read_uvarint(buf, 0)
+    try:
+        return pa.decompress(buf, decompressed_size=size, codec="snappy", asbytes=True)
+    except (OSError, MemoryError, pa.ArrowException) as ex:
+        raise SnappyError(f"corrupt snappy block: {ex!r}") from ex
 
 
 def compress(buf: bytes) -> bytes:
-    """Compress to a valid raw Snappy block (literal-only when pure Python)."""
-    if _native_compress is not None:
-        return _native_compress(buf)
-    out = bytearray(_write_uvarint(len(buf)))
-    pos = 0
-    n = len(buf)
-    while pos < n:
-        ln = min(_MAX_LITERAL, n - pos)
-        lm1 = ln - 1
-        if lm1 < 60:
-            out.append(lm1 << 2)
-        elif lm1 < (1 << 8):
-            out.append(60 << 2)
-            out += lm1.to_bytes(1, "little")
-        elif lm1 < (1 << 16):
-            out.append(61 << 2)
-            out += lm1.to_bytes(2, "little")
-        elif lm1 < (1 << 24):
-            out.append(62 << 2)
-            out += lm1.to_bytes(3, "little")
-        else:
-            out.append(63 << 2)
-            out += lm1.to_bytes(4, "little")
-        out += buf[pos : pos + ln]
-        pos += ln
-    return bytes(out)
+    """Compress to one raw Snappy block."""
+    return pa.compress(buf, codec="snappy", asbytes=True)

@@ -1,15 +1,16 @@
-"""Golden interop tests: parse the two fixtures committed with the
-reference (generated by Hadoop's own SequenceFile.Writer —
-tests/MakeSequenceFiles.java:16-29) and assert known invariants
-(SURVEY §5): 100,000 records each, 2 blocks, key patterns."""
+"""Golden interop tests: parse the two BLOCK+Snappy fixtures Hadoop's own
+SequenceFile.Writer writes (tools/make_jvm_fixtures.py, following the
+reference's tests/MakeSequenceFiles.java:16-29) and assert known
+invariants (SURVEY §5): 100,000 records each, 2 blocks, key patterns."""
 
 import pyarrow as pa
 import pytest
 
+from hadoop_formats_spark.queries.seqfile_q import (
+    REFERENCE_LONG_DOUBLE as LONG_DOUBLE,
+    REFERENCE_TEXT_INT as TEXT_INT,
+)
 from hadoop_formats_spark.seqfile import core
-
-TEXT_INT = "/root/reference/tests/text-int.seq"
-LONG_DOUBLE = "/root/reference/tests/long-double.seq"
 
 
 def test_header_text_int():

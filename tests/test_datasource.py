@@ -10,14 +10,15 @@ import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
+from hadoop_formats_spark.queries.seqfile_q import (
+    REFERENCE_LONG_DOUBLE as LONG_DOUBLE,
+    REFERENCE_TEXT_INT as TEXT_INT,
+)
 from hadoop_formats_spark.seqfile import core
 from hadoop_formats_spark.seqfile.datasource import (
     read_sequence_file,
     sequence_file_count,
 )
-
-TEXT_INT = "/root/reference/tests/text-int.seq"
-LONG_DOUBLE = "/root/reference/tests/long-double.seq"
 
 
 def test_read_reference_fixture_count(spark):

@@ -177,3 +177,18 @@ def test_text_multibyte_varint_prefix(tmp_path):
     p = str(tmp_path / "longtext.seq")
     write_table(p, t)
     assert read_file(p).column("value").to_pylist() == vals
+
+
+def test_non_utf8_header_class_raises_seqfile_error(tmp_path):
+    path = str(tmp_path / "h.seq")
+    core.write_table(path, pa.table({"key": ["a"], "value": pa.array([1], pa.int32())}))
+    buf = bytearray(open(path, "rb").read())
+    buf[buf.index(b"org.apache.hadoop.io.Text")] = 0xFF  # invalid UTF-8 lead byte
+    with pytest.raises(core.SeqFileError, match="UTF-8"):
+        core.parse_header(bytes(buf))
+
+
+def test_fixed_width_section_of_odd_length_raises_seqfile_error():
+    # 5 bytes cannot hold whole 4-byte IntWritables
+    with pytest.raises(core.SeqFileError, match="fixed-width"):
+        core._decode_column("org.apache.hadoop.io.IntWritable", b"", b"\x00" * 5, 1)

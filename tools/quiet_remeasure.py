@@ -30,6 +30,7 @@ def main() -> int:
         return 2
 
     from hadoop_formats_spark.queries import QUERIES
+    from hadoop_formats_spark.queries.seqfile_q import REFERENCE_TEXT_INT
     from hadoop_formats_spark.session import get_spark
 
     spark = get_spark("quiet-remeasure")
@@ -37,9 +38,7 @@ def main() -> int:
     # bench-identical warm-up: parquet + seqfile readers, full Arrow
     # python-worker pool (bench.py's import-storm note)
     spark.read.parquet(f"{sf_dir}/nation.parquet").count()
-    spark.read.format("hadoop_seq").load(
-        "/root/reference/tests/text-int.seq"
-    ).count()
+    spark.read.format("hadoop_seq").load(REFERENCE_TEXT_INT).count()
 
     def _noop(it):
         import numpy  # noqa: F401

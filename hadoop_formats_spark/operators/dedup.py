@@ -1019,7 +1019,7 @@ def shingle_containment_pairs(
     )
     if max_doc_freq is not None:
         hot = (
-            index.groupBy("shingle")
+            shingled.groupBy("shingle")
             .agg(F.count("*").alias("df"))
             .filter(F.col("df") > max_doc_freq)
             .select("shingle")

@@ -6,6 +6,10 @@ AQE on (runtime re-planning, skew-join splitting, partition
 coalescing), Arrow enabled for the Python boundary, shuffle
 partitions sized to cores (at 100 TB you'd raise
 ``spark.sql.shuffle.partitions`` and let AQE coalesce).
+
+Importing the package keeps Python workers' zip import caches valid
+without re-reading unchanged archives on every request (see
+``hadoop_formats_spark._stat_check_zip_invalidation``).
 """
 
 from __future__ import annotations
@@ -55,9 +59,7 @@ def get_spark(
     from .seqfile.datasource import register
     from .seqfile.map_datasource import register as register_map
 
-    for reg in (register, register_map):
-        try:
-            reg(spark)
-        except Exception:
-            pass  # already registered in this JVM
+    # a second registration in the same JVM replaces the first
+    register(spark)
+    register_map(spark)
     return spark

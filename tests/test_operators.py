@@ -387,6 +387,29 @@ def test_jaccard_doc_freq_cap(spark, docs):
         assert j == base_vals[pair]
 
 
+def test_containment_doc_freq_cap(spark, docs):
+    """A cap no shingle exceeds changes nothing; a tight cap drops hot
+    shingles but still finds exact dups via their (identical) rare set."""
+    base = {
+        (r["doc_a"], r["doc_b"])
+        for r in D.shingle_containment_pairs(docs, threshold=0.5).collect()
+    }
+    capped_loose = {
+        (r["doc_a"], r["doc_b"])
+        for r in D.shingle_containment_pairs(
+            docs, threshold=0.5, max_doc_freq=1000
+        ).collect()
+    }
+    assert capped_loose == base
+    capped_tight = {
+        (r["doc_a"], r["doc_b"])
+        for r in D.shingle_containment_pairs(
+            docs, threshold=0.5, max_doc_freq=2
+        ).collect()
+    }
+    assert (1, 4) in capped_tight  # exact dups survive any cap
+
+
 def test_jaccard_cap_plan_prunes_hot_postings(spark, docs):
     """The capped plan must anti-join hot shingles out BEFORE the
     inverted-index pair join — the 100 TB guarantee that an uncapped
